@@ -34,11 +34,13 @@ from ..operators.cache import persist_tracked
 def build_dictionary(df: DataFrame, tokens_col: str = "tokens", n_records: int | None = None) -> DataFrame:
     """Build (token, tid, freq, idf) with tid 0..V-1 ordered (freq ASC, token ASC).
 
-    ``n_records`` defaults to df.count() — for RS joins pass |A|+|B| over the
-    union, matching wordwt = log10((|A|+|B|)/freq) (tokenizer.cc:348-363).
+    ``n_records`` defaults to df's row count — for RS joins pass |A|+|B| over
+    the union, matching wordwt = log10((|A|+|B|)/freq) (tokenizer.cc:348-363).
+    The default count is a scalar subquery, not an eager job: it runs only
+    when a plan reads ``idf``, and yields the same double as ``float(n)``.
     """
-    if n_records is None:
-        n_records = df.count()
+    n = (F.lit(float(n_records)) if n_records is not None
+         else df.select(F.count("*").cast("double")).scalar())
     freqs = (
         df.select(F.explode(tokens_col).alias("token"))
         .groupBy("token")
@@ -67,7 +69,7 @@ def build_dictionary(df: DataFrame, tokens_col: str = "tokens", n_records: int |
             "token",
             (F.row_number().over(w_in) - 1 + F.col("__off")).cast("int").alias("tid"),
             "freq",
-            F.log10(F.lit(float(n_records)) / F.col("freq")).alias("idf"),
+            F.log10(n / F.col("freq")).alias("idf"),
         )
     )
 
@@ -100,7 +102,10 @@ def encode_tokens(
     emits no exploded rows), removing one join + its exchange from every
     join's prepare stage (guide §2.4). Only ``id_col`` survives from ``df``
     in this mode."""
-    d = dictionary.select("token", "tid", "idf")
+    # a caller that reads no weight carries a constant instead: the plan then
+    # never computes idf, nor the dictionary's record-count subquery
+    idf = F.col("idf") if weight_col or idfs_col else F.lit(0.0)
+    d = dictionary.select("token", "tid", idf.alias("idf"))
     if broadcast_dict:
         d = F.broadcast(d)
     exploded = df.select(id_col, F.explode(tokens_col).alias("token"))

@@ -1,21 +1,29 @@
-"""Random-forest model persistence + ANSI-SQL export (M2 evidence path).
+"""Random-forest model persistence + SQL export (M2 scoring and evidence path).
 
 The fitted forest is plain numpy arrays in the sklearn tree layout
 (children_left / children_right / feature / threshold / value — see
-``random_forest.py``), so it serializes losslessly to JSON and, more
-importantly, **exports to ANSI SQL**: each tree becomes a nested CASE
-expression over the feature columns (NULL features imputed to 0.0 exactly
-like the Arrow predict path, reference
-``simjoin_entitymatching/matcher/random_forest.py:660``), leaf class
-probabilities are constant literals computed at export time, and the forest
-probability is the running left-to-right mean. That lets an independent SQL
-engine (the DuckDB correctness oracle) reproduce ``apply_matcher`` output
-bit-for-bit — the cross-engine evidence that batch predict (M2,
-reference ``random_forest.py:618-780``) is faithful.
+``random_forest.py``), so it serializes losslessly to JSON and exports to
+SQL: each tree becomes a nested CASE expression over the feature columns
+(NULL features imputed to 0.0 like ``RandomForestMatcher.predict_proba``,
+reference ``simjoin_entitymatching/matcher/random_forest.py:660``), leaf
+class probabilities are constant literals computed at export time, and the
+forest probability is the left-to-right tree sum divided by the tree count.
+
+The same tree walk serves two engines:
+
+- Spark: ``apply_matcher`` scores with the Spark-dialect text as one native
+  Catalyst expression (no Python worker, no Arrow transfer). Literals are
+  typed double (``…D``; an untyped ``0.1`` parses as DECIMAL) and the
+  imputation is ``coalesce(nanvl(f, 0D), 0D)`` so NaN goes left like
+  ``nan_to_num`` sends it (Spark orders NaN above every double). The result
+  equals ``predict_proba`` bit for bit.
+- DuckDB: the correctness oracles reproduce ``apply_matcher`` output from
+  the default-dialect text — the cross-engine evidence that batch predict
+  (M2, reference ``random_forest.py:618-780``) is faithful.
 
 Float determinism: thresholds and leaf probabilities are emitted with
-``repr()`` (shortest round-trip decimal), which both Python and DuckDB parse
-back to the identical IEEE-754 double.
+``repr()`` (shortest round-trip decimal), which Python, Spark and DuckDB all
+parse back to the identical IEEE-754 double.
 """
 
 from __future__ import annotations
@@ -89,20 +97,28 @@ def _leaf_proba(value: np.ndarray) -> float:
     return float(value[1]) / tot if tot > 0 else 0.5
 
 
-def tree_to_sql(tree: Tree, feature_exprs: list[str]) -> str:
+#: per engine: (double literal, NaN/NULL -> 0.0 imputation of a feature)
+_DIALECTS = {
+    "duckdb": (repr, "coalesce({}, 0.0)"),
+    "spark": (lambda x: f"{x!r}D", "coalesce(nanvl({}, 0D), 0D)"),
+}
+
+
+def tree_to_sql(tree: Tree, feature_exprs: list[str],
+                dialect: str = "duckdb") -> str:
     """One tree as a nested CASE expression returning the P(match) leaf value.
 
-    Descent rule matches ``Tree.predict_proba``: go left iff
-    ``coalesce(feature, 0.0) <= threshold`` (the NaN->0.0 imputation of the
-    numpy path becomes a COALESCE)."""
+    Descent rule matches ``Tree.predict_proba``: go left iff the imputed
+    feature ``<= threshold``."""
+    lit, impute = _DIALECTS[dialect]
 
     def rec(node: int) -> str:
         if tree.feature[node] == _LEAF:
-            return repr(_leaf_proba(tree.value[node]))
-        f = feature_exprs[int(tree.feature[node])]
-        thr = repr(float(tree.threshold[node]))
+            return lit(_leaf_proba(tree.value[node]))
+        f = impute.format(feature_exprs[int(tree.feature[node])])
+        thr = lit(float(tree.threshold[node]))
         return (
-            f"(CASE WHEN coalesce({f}, 0.0) <= {thr} "
+            f"(CASE WHEN {f} <= {thr} "
             f"THEN {rec(int(tree.children_left[node]))} "
             f"ELSE {rec(int(tree.children_right[node]))} END)"
         )
@@ -111,11 +127,12 @@ def tree_to_sql(tree: Tree, feature_exprs: list[str]) -> str:
 
 
 def forest_proba_sql(model: RandomForestMatcher,
-                     feature_exprs: list[str] | None = None) -> str:
+                     feature_exprs: list[str] | None = None,
+                     dialect: str = "duckdb") -> str:
     """The forest's P(match) as one SQL scalar expression.
 
-    Left-to-right sum over trees, divided by n_trees — same association order
-    as a sequential mean over ``predict_proba`` outputs."""
+    Left-to-right sum over trees, divided by n_trees — the association order
+    of ``np.mean(axis=0)`` over the per-tree ``predict_proba`` rows."""
     exprs = feature_exprs or model.feature_names
-    parts = " + ".join(tree_to_sql(t, exprs) for t in model.trees)
+    parts = " + ".join(tree_to_sql(t, exprs, dialect) for t in model.trees)
     return f"(({parts}) / {len(model.trees)})"

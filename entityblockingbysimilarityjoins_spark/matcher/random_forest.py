@@ -9,9 +9,10 @@ threshold / value) — which is exactly what the blocking-rule extraction walks
 (reference graph.py:115-139 reads the same arrays).
 
 Spark mapping: training is driver-side (the labeled sample is small by
-construction); prediction broadcasts the fitted arrays and scores candidate
-batches inside a vectorized pandas UDF (Arrow transfer, no per-row Python) —
-replacing the reference's multiprocessing fan-out with executor parallelism.
+construction); prediction exports the fitted trees as one native CASE
+expression (``persist.forest_proba_sql``) that every executor evaluates in
+codegen — replacing the reference's multiprocessing fan-out with executor
+parallelism, with no Python worker on the scoring path.
 
 Conventions preserved: missing features imputed to 0.0 at train AND predict
 (random_forest.py:430,660); class_weight='balanced' emulated via sample
@@ -23,10 +24,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 _LEAF = -1
 
@@ -261,7 +260,7 @@ def train_model_active(
       the reference's three exit rules with identical constants.
 
     Driver-side like the other trainers (the labeled sample is small by
-    construction); the fitted model broadcasts into the Arrow predict UDF."""
+    construction); ``apply_matcher`` scores with the fitted model."""
     X = np.nan_to_num(np.asarray(X, dtype=np.float64), nan=0.0)
     y = np.asarray(y, dtype=np.int64)
     rng = np.random.default_rng(seed)
@@ -325,22 +324,6 @@ def train_model_active(
     return model
 
 
-def predict_column(model: RandomForestMatcher, feature_cols: list[str]):
-    """Vectorized pandas-UDF Column: match probability per candidate row.
-
-    The fitted model rides the UDF closure (Spark broadcasts it with the
-    task binary — numpy arrays, few KB)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DoubleType())
-    def _proba(*cols: pd.Series) -> pd.Series:
-        X = np.column_stack([c.to_numpy(dtype=np.float64, na_value=np.nan)
-                             for c in cols])
-        return pd.Series(model.predict_proba(X))
-
-    return _proba(*[F.col(c) for c in feature_cols])
-
-
 def apply_matcher(
     feature_df: DataFrame,
     model: RandomForestMatcher,
@@ -348,10 +331,15 @@ def apply_matcher(
     proba_col: str = "match_proba",
     label_col: str = "match",
 ) -> DataFrame:
-    """M2: score every candidate pair; `match` boolean splits pos/neg."""
+    """M2: score every candidate pair; `match` boolean splits pos/neg.
+
+    The forest is one native expression (``persist.forest_proba_sql`` in the
+    Spark dialect), equal to ``model.predict_proba`` bit for bit."""
+    from .persist import forest_proba_sql
+
+    cols = [f"`{c}`" for c in model.feature_names]
     scored = feature_df.withColumn(
-        proba_col, predict_column(model, model.feature_names)
-    )
+        proba_col, F.expr(forest_proba_sql(model, cols, dialect="spark")))
     return scored.withColumn(label_col, (F.col(proba_col) >= threshold))
 
 

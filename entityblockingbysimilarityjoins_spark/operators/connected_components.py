@@ -56,8 +56,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 #: edge lists at or under this size label on the driver in one numpy pass —
-#: a valve-guarded fast path (probe with a LIMIT count, never an unbounded
-#: collect): small graphs otherwise pay ~3 jobs x 3 shuffles per star round
+#: a valve-guarded fast path (a LIMIT cap + 1 collect, never an unbounded
+#: one): small graphs otherwise pay ~3 jobs x 3 shuffles per star round
 #: in pure scheduling latency. 10^6 edges collect as ~32 MB; larger graphs
 #: take the distributed large-star/small-star loop unchanged.
 DRIVER_CC_MAX_EDGES = 1_000_000
@@ -125,15 +125,14 @@ def connected_components(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .filter(F.col("u") != F.col("v"))
-        .localCheckpoint()
     )
-    if edges.limit(DRIVER_CC_MAX_EDGES + 1).count() <= DRIVER_CC_MAX_EDGES:
-        node_type = dict(edges.dtypes)["u"]
-        pdf = edges.toPandas()  # Arrow path (session enables it)
-        if len(pdf) == 0:
-            return edges.select(F.col("u").alias("node"),
-                                F.col("v").alias("component"))
-        return _driver_cc(pdf, pairs.sparkSession, node_type)
+    # ONE job decides the path and, for small graphs, is the whole collect:
+    # at most cap + 1 edges reach the driver (Arrow path, session enables it)
+    pdf = edges.limit(DRIVER_CC_MAX_EDGES + 1).toPandas()
+    if len(pdf) <= DRIVER_CC_MAX_EDGES:
+        return _driver_cc(pdf, pairs.sparkSession, dict(edges.dtypes)["u"])
+    del pdf
+    edges = edges.localCheckpoint()
     prev_stats = _stats(edges)
     for it in range(max_iterations):
         edges2 = _small_star(_large_star(edges)).localCheckpoint()

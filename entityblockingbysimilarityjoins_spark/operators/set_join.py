@@ -126,27 +126,13 @@ MAX_ALLPAIRS_SETS = 8192
 MAX_BITSET_WORDS = 4
 
 
-def _bitset_words(dictionary: DataFrame, weighted: bool) -> int | None:
-    """ceil(V/64) when the unweighted vocab fits MAX_BITSET_WORDS words.
-
-    Weighted joins keep the array path (verification needs per-token IDF
-    sums, not counts). The size probe is a LIMIT count, never a collect."""
-    if weighted:
-        return None
-    cap = MAX_BITSET_WORDS * 64
-    n = dictionary.limit(cap + 1).count()
-    if n > cap:
-        return None
-    return max(1, -(-n // 64))
-
-
 class _InlineVocab:
     """Driver-inlined tiny dictionary: token->tid literal map + idf-by-tid
     literal array. When the probed vocabulary fits MAX_BITSET_WORDS*64
     entries, record encoding becomes a pure projection (map lookup + sort)
     instead of explode + dictionary join + groupBy — removing two exchanges
-    from every join's prepare stage (guide §2.4). The collect is valve-
-    guarded by the same LIMIT probe as the bitset path; big vocabularies
+    from every join's prepare stage (guide §2.4). Every collect that builds
+    one is bounded by a LIMIT just over the cap; big vocabularies
     never reach the driver."""
 
     def __init__(self, rows):
@@ -204,6 +190,25 @@ def _inline_vocab(dictionary: DataFrame) -> _InlineVocab | None:
     return _InlineVocab(rows)
 
 
+def _probe_collect(tokens_df: DataFrame, freqs: DataFrame,
+                   freq_sentinels: int) -> list:
+    """Collect ``freqs`` (token, freq) rows just past the inline cap, plus
+    the approximate distinct-SET count, in ONE job.
+
+    The set count (the all-pairs sweep gate) rides as one more sentinel row
+    with token=NULL, which no tokenizer emits; ``freq_sentinels`` counts the
+    sentinel rows ``freqs`` already carries. The LIMIT is cap + 1 + every
+    sentinel: a vocabulary within the cap keeps all its rows, sentinels
+    included, while a larger one keeps at least cap + 1 real tokens — enough
+    to reject it, whichever sentinels the LIMIT dropped."""
+    nsets = tokens_df.agg(
+        F.approx_count_distinct("tokens").alias("freq")).select(
+        F.lit(None).cast(freqs.schema["token"].dataType).alias("token"), "freq")
+    n_sentinels = freq_sentinels + 1
+    cap = MAX_BITSET_WORDS * 64
+    return freqs.unionByName(nsets).limit(cap + 1 + n_sentinels).collect()
+
+
 def _inline_vocab_unweighted(tokens_df: DataFrame) -> _InlineVocab | None:
     """ONE-job inline vocabulary for unweighted joins: collect the (token,
     freq) pairs under the cap straight off the frequency aggregation and
@@ -217,14 +222,7 @@ def _inline_vocab_unweighted(tokens_df: DataFrame) -> _InlineVocab | None:
         tokens_df.select(F.explode("tokens").alias("token"))
         .groupBy("token").agg(F.count("*").alias("freq"))
     )
-    # piggyback an approximate distinct-SET count on the same probe job (one
-    # extra aggregation branch, one action): it gates the all-pairs bitmask
-    # sweep below without a second job. The sentinel row carries token=NULL,
-    # which no tokenizer emits.
-    nsets = tokens_df.agg(
-        F.approx_count_distinct("tokens").alias("freq")).select(
-        F.lit(None).cast(freqs.schema["token"].dataType).alias("token"), "freq")
-    rows = freqs.unionByName(nsets).limit(cap + 3).collect()
+    rows = _probe_collect(tokens_df, freqs, freq_sentinels=0)
     n_sets_approx = None
     toks = []
     for r in rows:
@@ -265,13 +263,7 @@ def _inline_vocab_weighted(tokens_df: DataFrame) -> _InlineVocab | None:
                                F.lit(""))).alias("token"))
         .groupBy("token").agg(F.count("*").alias("freq"))
     )
-    # piggyback the approximate distinct-SET count (all-pairs sweep gate) on
-    # the same probe job, exactly as the unweighted probe does; the sentinel
-    # row carries token=NULL, which the explode above can never emit.
-    nsets = tokens_df.agg(
-        F.approx_count_distinct("tokens").alias("freq")).select(
-        F.lit(None).cast(freqs.schema["token"].dataType).alias("token"), "freq")
-    rows = freqs.unionByName(nsets).limit(cap + 4).collect()
+    rows = _probe_collect(tokens_df, freqs, freq_sentinels=1)  # the '' row
     n_records = 0
     n_sets_approx = None
     toks = []
@@ -294,6 +286,35 @@ def _inline_vocab_weighted(tokens_df: DataFrame) -> _InlineVocab | None:
     vocab.freqs = {r["token"]: r["freq"] for r in toks}
     vocab.n_sets_approx = n_sets_approx
     return vocab
+
+
+def _vocab(
+    tokens_df: DataFrame,
+    dictionary: DataFrame | None,
+    weighted: bool,
+    max_token_freq: int | None,
+) -> tuple[_InlineVocab | None, DataFrame | None]:
+    """(inline vocab or None, dictionary or None) for a join over
+    ``tokens_df``'s token arrays.
+
+    Without a caller dictionary (and without the ``max_token_freq`` valve,
+    which needs real frequencies), the one-job probe decides: None from it
+    already proves the vocabulary is over the inline cap (or empty), so the
+    full dictionary is built and never probed again. A caller-supplied or
+    valve-built dictionary is probed with a LIMIT count — the literal-vs-map
+    path is chosen by VOCAB SIZE, never by trust in the caller's flag, so
+    oversized vocabularies never collect to the driver."""
+    probed = dictionary is None and max_token_freq is None
+    if probed:
+        probe = _inline_vocab_weighted if weighted else _inline_vocab_unweighted
+        inline = probe(tokens_df)
+        if inline is not None:
+            return inline, None
+    if dictionary is None:
+        dictionary = build_dictionary(tokens_df)
+    if weighted:
+        dictionary = persist_tracked(dictionary)
+    return (None if probed else _inline_vocab(dictionary)), dictionary
 
 
 def _mask_cols(tids: Column, n_words: int) -> list[Column]:
@@ -636,22 +657,8 @@ def _self_join_parts(
     pairs when ``group_identical=False``; ``groups`` is None then) — shared
     by the public join and the fused top-K path, which consumes set-level
     scores without ever materializing the expanded pair table."""
-    inline = None
-    if dictionary is None:
-        if max_token_freq is None:
-            # one-job vocabulary probe; falls through to the full
-            # dictionary build only when the vocab exceeds the inline cap
-            probe = (_inline_vocab_weighted if weighted
-                     else _inline_vocab_unweighted)
-            inline = probe(df.select(F.col(tokens_col).alias("tokens")))
-        if inline is None:
-            dictionary = build_dictionary(df.select(F.col(tokens_col).alias("tokens")))
-    if weighted and dictionary is not None:
-        dictionary = persist_tracked(dictionary)
-    # literal-vs-map verification path chosen by VOCAB SIZE, not trust in the
-    # caller's flag: oversized vocabularies never collect to the driver
-    if inline is None:
-        inline = _inline_vocab(dictionary)
+    inline, dictionary = _vocab(df.select(F.col(tokens_col).alias("tokens")),
+                                dictionary, weighted, max_token_freq)
     if inline is not None:
         idf_arr = inline.idf_arr if weighted else None
     else:
@@ -836,21 +843,10 @@ def set_similarity_rs_join(
 
     Two asymmetric index-vs-probe joins cover both length orderings (ties
     treat the R side as smaller)."""
-    inline = None
-    if dictionary is None:
-        union = df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
-            df_s.select(F.col(tokens_col).alias("tokens"))
-        )
-        if max_token_freq is None:
-            probe = (_inline_vocab_weighted if weighted
-                     else _inline_vocab_unweighted)
-            inline = probe(union)
-        if inline is None:
-            dictionary = build_dictionary(union)
-    if weighted and dictionary is not None:
-        dictionary = persist_tracked(dictionary)
-    if inline is None:
-        inline = _inline_vocab(dictionary)
+    union = df_r.select(F.col(tokens_col).alias("tokens")).unionAll(
+        df_s.select(F.col(tokens_col).alias("tokens"))
+    )
+    inline, dictionary = _vocab(union, dictionary, weighted, max_token_freq)
     if inline is not None:
         idf_arr = inline.idf_arr if weighted else None
     else:

@@ -3,6 +3,14 @@
 Defaults target the sandbox (single JVM, ``local[N]``); the same settings are
 what we would submit on a real cluster via ``spark-submit --py-files`` —
 AQE (with skew-join handling) on, Arrow on, sane shuffle parallelism.
+
+PySpark's per-call call-site capture (``dataFrameDebugging``) is off: with it
+on, every ``F.*``/``Column`` call walks the Python stack and makes about four
+extra py4j round trips, which dominated plan building for the feature and
+join operators. Error messages then lack the Python call-site fragment; pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`` to get
+it back. PySpark reads the flag once per process, on the first Column call
+made while a session is active, so it only takes effect at session creation.
 """
 
 from __future__ import annotations
@@ -73,6 +81,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
         .config("spark.sql.session.timeZone", "UTC")
+        # no Python call-site capture per Column call (see module doc)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # single-JVM local mode: the "driver" heap is also every executor's
         # heap — 8g GC-thrashes 32-thread shuffles at bench scale; capped by
         # the host/cgroup budget so small containers still start

@@ -308,9 +308,14 @@ def rematch_negatives(
     are the 1x1 raw pair (identical expressions), identical values hit the
     same-group branch whose constants equal the flat sims exactly, and the
     one residual cell difference (flat NULL vs IC 0.0 on empty token sets)
-    vanishes under the matcher's NaN->0.0 imputation. This is also the
-    frozen oracle's own structure — its pass 2 swaps only the grouped
-    attribute's IC features into the pass-1 matrix."""
+    vanishes under the matcher's NaN->0.0 imputation. One corner is not a
+    wash: two IDENTICAL non-empty values whose token set is empty (e.g.
+    all-punctuation under a q-gram tokenizer) score 1.0 in the IC
+    same-group branch but NULL (imputed 0.0) as a flat token sim. The
+    reused flat value is the correct one: it is what the frozen oracle
+    computes (``rematch_res`` hashes equal), since the oracle's pass 2
+    also swaps only the grouped attribute's IC features into the pass-1
+    matrix."""
     from ..matcher.random_forest import apply_matcher
 
     grouped = set(groups_per_attr)

@@ -109,3 +109,46 @@ def test_active_learning_trainer():
         and np.array_equal(a.feature, b.feature)
         for a, b in zip(m1.trees, m2.trees)
     )
+
+
+def test_spark_apply_matcher_equals_predict_proba(spark):
+    """apply_matcher scores with one native expression that equals numpy's
+    predict_proba bit for bit — NULL, NaN, +-inf, -0.0 and features sitting
+    exactly on a split threshold included — over a deep forest (max_depth
+    64, as train_model_active builds) plus a tree with a zero-weight leaf,
+    and the plan runs no Python worker."""
+    from entityblockingbysimilarityjoins_spark.matcher.random_forest import (
+        Tree,
+        apply_matcher,
+    )
+
+    rng = np.random.default_rng(5)
+    X = rng.random((300, 3))
+    y = ((X[:, 0] + X[:, 1] > 1.0) ^ (rng.random(300) < 0.15)).astype(np.int64)
+    names = ["f0", "f1", "f2"]
+    m = RandomForestMatcher(n_trees=6, max_depth=64, min_samples_leaf=1,
+                            random_state=2).fit(X, y, feature_names=names)
+    m.trees.append(Tree(
+        feature=np.array([1, -1, -1]),
+        threshold=np.array([0.5, 0.0, 0.0]),
+        children_left=np.array([1, -1, -1]),
+        children_right=np.array([2, -1, -1]),
+        value=np.array([[3.0, 1.0], [0.0, 0.0], [0.0, 2.0]]),  # empty leaf
+    ))
+    assert max(len(t.feature) for t in m.trees) > 40  # a deep forest
+    thr = [t.threshold[t.feature != -1] for t in m.trees]
+    on_split = [float(v) for v in np.concatenate(thr)[:30]]
+    specials = [None, float("nan"), float("inf"), float("-inf"), -0.0, 0.0]
+    rows = [tuple(map(float, r)) for r in X]
+    rows += [(a, b, c) for a in specials for b in specials for c in (None, 0.7)]
+    rows += [(v, v, v) for v in on_split]
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)],
+        "rid int, f0 double, f1 double, f2 double")
+    scored = apply_matcher(df, m)
+    assert "EvalPython" not in scored._jdf.queryExecution().executedPlan().toString()
+    got = sorted((r["rid"], r["match_proba"], r["match"]) for r in scored.collect())
+    Xs = np.array([[np.nan if v is None else v for v in r] for r in rows])
+    want = m.predict_proba(Xs)
+    assert np.array_equal(np.array([p for _, p, _ in got]), want)
+    assert [b for _, _, b in got] == list(want >= 0.5)

@@ -51,3 +51,35 @@ def test_overlap_rs_join(spark):
     df_s = spark.createDataFrame(rows_s, ["rid", "t"]).withColumn("tokens", tokens_wspace("t"))
     got = {(r["id1"], r["id2"]) for r in overlap_rs_join(df_r, df_s, "rid", "tokens", c=c).collect()}
     assert got == want
+
+
+def test_big_vocab_overlap_joins_skip_reprobe(spark, monkeypatch):
+    """Over the 256-token inline cap the one-job probe's None decides: no
+    LIMIT re-probe of the built dictionary, results equal brute force."""
+    import entityblockingbysimilarityjoins_spark.operators.overlap_join as OJ
+    import entityblockingbysimilarityjoins_spark.operators.set_join as SJ
+
+    def no_reprobe(dictionary):
+        raise AssertionError("_inline_vocab re-probed after the one-job probe")
+
+    monkeypatch.setattr(SJ, "_inline_vocab", no_reprobe)
+    # also where an importer may hold its own reference
+    monkeypatch.setattr(OJ, "_inline_vocab", no_reprobe, raising=False)
+    rng = random.Random(29)
+    vocab = [f"v{i}" for i in range(300)]
+    rows_r = [(i, " ".join(rng.sample(vocab, rng.randint(0, 40)))) for i in range(40)]
+    rows_s = [(i, " ".join(rng.sample(vocab, rng.randint(0, 40)))) for i in range(45)]
+    assert len({t for _, s in rows_r for t in s.split()}) > 256
+    sr, ss = _sets(rows_r), _sets(rows_s)
+    df_r = spark.createDataFrame(rows_r, ["rid", "t"]).withColumn("tokens", tokens_wspace("t"))
+    df_s = spark.createDataFrame(rows_s, ["rid", "t"]).withColumn("tokens", tokens_wspace("t"))
+    c = 6
+    want = {(i, j): len(sr[i] & sr[j]) for i, j in itertools.combinations(sorted(sr), 2)
+            if len(sr[i] & sr[j]) >= c}
+    got = {(r["id1"], r["id2"]): r["overlap"]
+           for r in overlap_self_join(df_r, "rid", "tokens", c=c).collect()}
+    assert got == want and got
+    want_rs = {(i, j) for i in sr for j in ss if len(sr[i] & ss[j]) >= c}
+    got_rs = {(r["id1"], r["id2"])
+              for r in overlap_rs_join(df_r, df_s, "rid", "tokens", c=c).collect()}
+    assert got_rs == want_rs and got_rs

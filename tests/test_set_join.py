@@ -254,3 +254,64 @@ def test_rs_allpairs_valve_matches_prefix_path(spark, monkeypatch):
             dfr, dfs, "rid", "tokens", sim, t, weighted=w).collect()))
         monkeypatch.undo()
         assert fast == slow and fast, (sim, t, w)
+
+
+def _big_vocab_rows(seed: int, n: int):
+    """Records over a 400-token vocabulary (over the 256-token inline cap),
+    with near-duplicates so pairs exist at high thresholds."""
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = [(i, " ".join(rng.sample(vocab, rng.randint(4, 9)))) for i in range(n)]
+    for i in range(n // 4):
+        toks = rows[i][1].split()
+        toks[0] = rng.choice(vocab)
+        rows.append((n + i, " ".join(toks)))
+    return rows + [(2 * n, ""), (2 * n + 1, "héllo wörld")]
+
+
+def test_big_vocab_joins_skip_reprobe(spark, monkeypatch):
+    """Over the inline cap, a None from the one-job probe already decides:
+    the self and RS joins build the dictionary and never LIMIT-probe it
+    again — and still equal brute force."""
+    import entityblockingbysimilarityjoins_spark.operators.set_join as SJ
+
+    def no_reprobe(dictionary):
+        raise AssertionError("_inline_vocab re-probed after the one-job probe")
+
+    monkeypatch.setattr(SJ, "_inline_vocab", no_reprobe)
+    rows = _big_vocab_rows(21, 120)
+    assert len({t for _, s in rows for t in s.split()}) > 256
+    df = spark.createDataFrame(rows, ["rid", "s"]).withColumn("tokens", tokens_dlm("s"))
+    for kind, t in (("jac", 0.6), ("cos", 0.7)):
+        got = {(r["id1"], r["id2"]) for r in
+               set_similarity_self_join(df, "rid", "tokens", kind, t).collect()}
+        assert got == _oracle_self(rows, kind, t) and got, (kind, t)
+    rows_s = _big_vocab_rows(22, 90)
+    dfs = spark.createDataFrame(rows_s, ["rid", "s"]).withColumn("tokens", tokens_dlm("s"))
+    sr, ss = _sets(rows), _sets(rows_s)
+    want = {(i, j) for i in sr for j in ss if _sim(sr[i], ss[j], "jac") >= 0.5}
+    got = {(r["id1"], r["id2"]) for r in
+           set_similarity_rs_join(df, dfs, "rid", "tokens", "jac", 0.5).collect()}
+    assert got == want and got
+
+
+def test_caller_dictionary_reaches_inline_path(spark, monkeypatch):
+    """A small caller-supplied dictionary (the blocker's path) is still
+    probed, and takes the inline vocabulary with its bitmask verify."""
+    import entityblockingbysimilarityjoins_spark.operators.set_join as SJ
+    from entityblockingbysimilarityjoins_spark.functions.dictionary import build_dictionary
+
+    orig, probed = SJ._inline_vocab, []
+
+    def spy(dictionary):
+        probed.append(orig(dictionary))
+        return probed[-1]
+
+    monkeypatch.setattr(SJ, "_inline_vocab", spy)
+    rows = _corpus(seed=7, n=60)
+    df = spark.createDataFrame(rows, ["rid", "s"]).withColumn("tokens", tokens_dlm("s"))
+    d = build_dictionary(df.select("tokens"))
+    got = {(r["id1"], r["id2"]) for r in set_similarity_self_join(
+        df, "rid", "tokens", "jac", 0.5, dictionary=d).collect()}
+    assert got == _oracle_self(rows, "jac", 0.5)
+    assert len(probed) == 1 and probed[0] is not None
